@@ -32,11 +32,18 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
-# Set-ups per untraced run; setup_s is their median.
-SETUPS = 3
-# Fewest measured jobs per untraced run; docs_per_s and cpu_ms_per_doc
-# are medians over them.
+# Fewest warm jobs per untraced run; docs_per_s and cpu_ms_per_doc are
+# medians over them.
 MIN_JOBS = 2
+# Single-threaded latency passes per untraced run; a document's latency
+# is its fastest pass.
+PASSES = 2
+# Driver heap, in place of build_session's 8g default. The host's memory
+# is shared with other tenants, and with an 8g heap the JVM grows its heap
+# by GC timing: over ten curate_corpus runs the process tree peaked at
+# 3.2-5.5 GB (quartile spread 22% of the median), against 1.6-1.9 GB
+# with 1g. A change to build_session's default does not show here.
+DRIVER_MEMORY = "1g"
 
 
 def log(msg: str) -> None:
@@ -80,11 +87,12 @@ class Context:
 
 def start_session(ctx: Context, event_dir: str | None = None):
     """Session through the program's own builder, on local[nproc], with
-    every scratch directory inside the run's work directory."""
+    a DRIVER_MEMORY heap and every scratch directory inside the run's
+    work directory."""
     from go_trafilatura_spark.pipeline import build_session
 
     conf = {
-        "spark.driver.memory": "1g",
+        "spark.driver.memory": DRIVER_MEMORY,
         "spark.local.dir": ctx.tmp,
         "spark.sql.warehouse.dir": ctx.path("warehouse"),
         "spark.ui.showConsoleProgress": "false",
@@ -106,9 +114,9 @@ def start_session(ctx: Context, event_dir: str | None = None):
     return spark
 
 
-def stop_session(ctx: Context, shutdown_jvm: bool) -> None:
-    """Stop the session; with ``shutdown_jvm`` also end the JVM and wait
-    for it and every process it started."""
+def stop_session(ctx: Context) -> None:
+    """Stop the session, end the JVM and wait for it and every process
+    it started."""
     import proctree
     from pyspark import SparkContext
 
@@ -122,9 +130,6 @@ def stop_session(ctx: Context, shutdown_jvm: bool) -> None:
         # An interrupted Py4J call leaves the gateway unusable; the JVM
         # must still go.
         log(f"session stop failed ({e!r}); ending the JVM")
-        shutdown_jvm = True
-    if not shutdown_jvm:
-        return
     gateway = SparkContext._gateway
     if gateway is not None:
         try:
@@ -145,10 +150,10 @@ def stop_session(ctx: Context, shutdown_jvm: bool) -> None:
     proctree.reap(pids)
 
 
-def stage_inputs(ctx: Context, inputs, name: str) -> str:
+def stage_inputs(ctx: Context, inputs) -> str:
     import pyarrow.parquet as pq
 
-    path = ctx.path(name)
+    path = ctx.path("in")
     os.makedirs(path, exist_ok=True)
     pq.write_table(inputs.arrow_table(), os.path.join(path, "pages.parquet"))
     return path
@@ -162,14 +167,15 @@ def spin_up(ctx: Context, in_path: str) -> None:
     pipeline.extract_pages(pages, ctx.options).count()
 
 
-def set_up(ctx: Context, i: int, event_dir: str | None = None):
-    """One set-up: seeded input staging, session start and worker
-    spin-up. Returns (inputs, staged path, seconds taken)."""
+def set_up(ctx: Context, event_dir: str | None = None):
+    """The set-up of a batch job submitted on its own: seeded input
+    staging, session start with JVM launch, and worker spin-up. Returns
+    (inputs, staged path, seconds taken)."""
     import workloads
 
     t0 = time.perf_counter()
     inputs = workloads.build(ctx.workload, ctx.seed, ctx.nproc)
-    in_path = stage_inputs(ctx, inputs, f"in{i}")
+    in_path = stage_inputs(ctx, inputs)
     start_session(ctx, event_dir)
     spin_up(ctx, in_path)
     return inputs, in_path, time.perf_counter() - t0
@@ -324,11 +330,12 @@ def phase_targets():
 
 def latency_pass(ctx: Context, inputs, per_doc: dict, first_cpu: int) -> dict:
     """One single-threaded pass with only core.extract timed per
-    document; keeps each document's fastest time in ``per_doc``. Returns
-    the pass's output."""
+    document, in CPU time of the pass's thread, so time the thread spends
+    preempted does not count; keeps each document's fastest time in
+    ``per_doc``. Returns the pass's output."""
     from spans import SpanRecorder
 
-    rec = SpanRecorder()
+    rec = SpanRecorder(clock=time.thread_time_ns)
     rec.install([root_target()])
     try:
         got, _ = kernel_pass(ctx, inputs, rec, first_cpu)
@@ -337,61 +344,69 @@ def latency_pass(ctx: Context, inputs, per_doc: dict, first_cpu: int) -> dict:
     times = rec.doc_durations("core.extract")
     for url, ns in times.items():
         per_doc[url] = min(ns, per_doc.get(url, ns))
+    adversarial = sum(times[u] for u in inputs.shape_of)
     log(f"latency pass from cpu {first_cpu}: median "
-        f"{statistics.median(times.values()) / 1e6:.3f} ms over {len(times)} docs")
+        f"{statistics.median(times.values()) / 1e6:.3f} ms over {len(times)} docs, "
+        f"total {sum(times.values()) / 1e9:.2f} s, adversarial pages "
+        f"{adversarial / 1e9:.2f} s")
     return got
+
+
+def timed_job(ctx: Context, in_path: str, out: str):
+    """One job with its wall time, tree CPU and peak tree memory.
+    Returns (persisted frames, wall s, CPU s, peak bytes)."""
+    import proctree
+
+    sampler = proctree.MemSampler().start()
+    cpu0 = proctree.tree_cpu_s()
+    t0 = time.perf_counter()
+    try:
+        handles = run_job(ctx, in_path, out)
+    finally:
+        wall = time.perf_counter() - t0
+        cpu = proctree.tree_cpu_s() - cpu0
+        peak = sampler.stop()
+    return handles, wall, cpu, peak
 
 
 def run_untraced(ctx: Context):
     import checks
-    import proctree
 
-    setup_s = []
-    for i in range(SETUPS):
-        if i:
-            stop_session(ctx, shutdown_jvm=False)
-        inputs, in_path, dt = set_up(ctx, i)
-        setup_s.append(dt)
-        log(f"set-up {i}: {dt:.2f} s")
+    inputs, in_path, setup_s = set_up(ctx)
+    log(f"set-up: {setup_s:.2f} s")
     n = len(inputs)
 
-    # Single-threaded latency passes and Spark jobs interleave, whichever
-    # has had less time so far going next, so both sample the host over
-    # the whole run: a shared host's cores slow down by tens of percent
-    # for seconds at a time. Each kind runs until its summed wall time
-    # reaches --seconds, and there are at least MIN_JOBS jobs. The first
-    # job starts cold, as a batch job submitted on its own does. A
-    # document's latency is its fastest pass; each pass starts on another
-    # core.
+    # The first job starts cold and only warms the JVM and the workers;
+    # its output is checked, its times are not used. Then single-threaded
+    # latency passes and warm Spark jobs alternate, so both sample the
+    # host over the whole run: a shared host's cores slow down by tens of
+    # percent for seconds at a time. Jobs run until there are MIN_JOBS
+    # and their summed wall time reaches --seconds; there are PASSES
+    # passes, each starting on another core.
+    out = ctx.path("out0")
+    handles, wall, _, peak = timed_job(ctx, in_path, out)
+    log(f"warm-up job: {wall:.2f} s")
+    outs, mems = [out], [peak]
     per_doc: dict[str, int] = {}
     passes: list[dict] = []
-    pass_s = 0.0
-    walls, cpus, mems, outs = [], [], [], []
-    handles = None
-    while True:
-        need_job = len(walls) < MIN_JOBS or sum(walls) < ctx.seconds
-        need_pass = pass_s < ctx.seconds
-        if need_pass and (pass_s <= sum(walls) or not need_job):
-            t0 = time.perf_counter()
+    walls, cpus = [], []
+
+    def jobs_done():
+        return len(walls) >= MIN_JOBS and sum(walls) >= ctx.seconds
+
+    while not jobs_done() or len(passes) < PASSES:
+        if len(passes) < PASSES and (len(passes) <= len(walls) or jobs_done()):
             passes.append(latency_pass(ctx, inputs, per_doc, len(passes)))
-            pass_s += time.perf_counter() - t0
-        elif need_job:
-            release(handles)
-            out = ctx.path(f"out{len(walls)}")
-            sampler = proctree.MemSampler().start()
-            cpu0 = proctree.tree_cpu_s()
-            t0 = time.perf_counter()
-            try:
-                handles = run_job(ctx, in_path, out)
-            finally:
-                walls.append(time.perf_counter() - t0)
-                cpus.append(proctree.tree_cpu_s() - cpu0)
-                mems.append(sampler.stop())
-            outs.append(out)
-        else:
-            break
-    log(f"{len(walls)} jobs: " + " ".join(f"{w:.2f}" for w in walls)
-        + f"; {len(passes)} latency passes, {pass_s:.2f} s")
+            continue
+        release(handles)
+        out = ctx.path(f"out{len(outs)}")
+        handles, wall, cpu, peak = timed_job(ctx, in_path, out)
+        walls.append(wall)
+        cpus.append(cpu)
+        mems.append(peak)
+        outs.append(out)
+    log(f"{len(walls)} warm jobs: " + " ".join(f"{w:.2f}" for w in walls)
+        + f"; {len(passes)} latency passes")
     doc_ms = [ns / 1e6 for ns in per_doc.values()]
     reference = passes[0]
 
@@ -402,7 +417,7 @@ def run_untraced(ctx: Context):
         ext = handles[0]
         texts = {r["doc_id"]: r["text"] for r in ext.select("doc_id", "text").toArrow().to_pylist()}
     release(handles)
-    stop_session(ctx, shutdown_jvm=True)
+    stop_session(ctx)
 
     for got in passes[1:]:
         failures += [f"{u}: single-thread passes disagree"
@@ -430,7 +445,7 @@ def run_untraced(ctx: Context):
     attempted += n
 
     metrics = {
-        "setup_s": (statistics.median(setup_s), "s", len(setup_s)),
+        "setup_s": (setup_s, "s", 1),
         "docs_per_s": (n / statistics.median(walls), "1/s", len(walls)),
         "cpu_ms_per_doc": (statistics.median(cpus) * 1000 / n, "ms", len(cpus)),
         "peak_rss_mb": (max(mems) / 2**20, "MB", len(mems)),
@@ -449,6 +464,7 @@ REJECT_KINDS = ("null_html", "not_html", "oversized", "parse_error")
 def kernel_layer_metrics(ctx: Context, inputs) -> tuple[dict, list[str], dict]:
     """Untraced then traced kernel pass over the same batches."""
     import checks
+    import hostile
     from spans import SpanRecorder
 
     plain = SpanRecorder()
@@ -494,14 +510,22 @@ def kernel_layer_metrics(ctx: Context, inputs) -> tuple[dict, list[str], dict]:
     m["trace.overhead_ms_per_doc"] = ((wall1 - wall0) * 1000 / n, "ms", 1)
     m["trace.overhead_share"] = (wall1 / wall0 - 1, "share", 1)
 
-    # time(2n)/time(n) per adversarial shape, medians over copies.
-    per_doc = rec.doc_durations("core.extract")
-    by_shape: dict[tuple, list] = {}
-    for url, (shape, size) in inputs.shape_of.items():
-        by_shape.setdefault((shape, size), []).append(per_doc[url])
-    ratios = [statistics.median(by_shape[(shape, 2 * size)]) / statistics.median(v)
-              for (shape, size), v in by_shape.items() if (shape, 2 * size) in by_shape]
+    # Per adversarial shape: core.extract time at n and 2n, and their
+    # ratio; the adversarial pages' share of all core.extract time. From
+    # the untraced pass, where core.extract is the only wrapped function.
+    per_doc = plain.doc_durations("core.extract")
+    ms = {key: per_doc[url] / 1e6 for url, key in inputs.shape_of.items()}
+    ratios = []
+    for shape, size in hostile.SHAPE_SIZES.items():
+        at_n, at_2n = ms.get((shape, size), 0.0), ms.get((shape, 2 * size), 0.0)
+        count = int((shape, size) in ms)
+        m[f"hostile.{shape}.ms"] = (at_n, "ms", count)
+        m[f"hostile.{shape}.2n_ms"] = (at_2n, "ms", count)
+        if count:
+            ratios.append(at_2n / at_n)
     m["hostile.doubling_ratio_max"] = (max(ratios) if ratios else 0.0, "ratio", len(ratios))
+    m["hostile.adversarial_share"] = (sum(ms.values()) * 1e6 / sum(per_doc.values()),
+                                      "share", len(ms))
     return m, failures, traced
 
 
@@ -588,7 +612,7 @@ def run_traced(ctx: Context):
     import eventlog
 
     event_dir = ctx.path("events")
-    inputs, in_path, _ = set_up(ctx, 0, event_dir)
+    inputs, in_path, _ = set_up(ctx, event_dir)
     n = len(inputs)
     wl = ctx.workload
     # One discarded job first, so the composed job and the stage-by-stage
@@ -629,7 +653,7 @@ def run_traced(ctx: Context):
             m[f"{name}.ms"] = (0.0, "ms", 0)
             m[f"{name}.rows_out"] = (0, "count", 0)
         m["pipeline.corpus_dedup_pipeline.composition_overhead_ms"] = (0.0, "ms", 0)
-    stop_session(ctx, shutdown_jvm=True)
+    stop_session(ctx)
 
     logs = [os.path.join(event_dir, f) for f in os.listdir(event_dir)]
     ev = eventlog.EventLog(logs[0])
@@ -680,7 +704,7 @@ def main(argv=None) -> int:
             metrics, attempted, failures = run_untraced(ctx)
     finally:
         try:
-            stop_session(ctx, shutdown_jvm=True)
+            stop_session(ctx)
         finally:
             shutil.rmtree(ctx.work, ignore_errors=True)
     log(f"run took {time.perf_counter() - t0:.1f} s")

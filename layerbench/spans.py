@@ -6,8 +6,9 @@ another package module imported under the same identity) with wrappers
 that record one span per call, and ``uninstall`` puts the originals
 back. Nothing inside the program is edited.
 
-Each span holds a name, start and end (``perf_counter_ns``), its parent
-span and a document id. A function marked as the document root opens a
+Each span holds a name, start and end (``perf_counter_ns`` by default,
+or another nanosecond clock such as ``thread_time_ns``), its parent span
+and a document id. A function marked as the document root opens a
 new document; every span until the next root shares its id. Spans stay
 in flat arrays while the pass runs and are written out by ``dump``.
 A span's self time is its duration minus the durations of its direct
@@ -23,7 +24,8 @@ from array import array
 
 
 class SpanRecorder:
-    def __init__(self):
+    def __init__(self, clock=time.perf_counter_ns):
+        self.clock = clock
         self.names: list[str] = []
         self._name_ids: dict[str, int] = {}
         self.name_id = array("i")
@@ -51,11 +53,11 @@ class SpanRecorder:
         self.doc.append(len(self.doc_keys) - 1 if doc is None else doc)
         self.end.append(0)
         self._stack.append(idx)
-        self.start.append(time.perf_counter_ns())
+        self.start.append(self.clock())
         return idx
 
     def close(self, idx: int) -> None:
-        self.end[idx] = time.perf_counter_ns()
+        self.end[idx] = self.clock()
         self._stack.pop()
 
     def wrap(self, name: str, fn, doc_key=None):

@@ -21,8 +21,10 @@ from go_trafilatura_spark.kernel import DEFAULT_MAX_HTML_BYTES
 
 import hostile
 
+WORKLOADS = ("extract_hostile", "curate_corpus")
+
 # Fixture pages per local core; the input scales with nproc.
-PAGES_PER_CORE = {"extract_hostile": 250, "curate_corpus": 250}
+PAGES_PER_CORE = 250
 
 # extract_pages options per workload: the CLI default (fallback on) for
 # the extraction workload, the extract_job default for curation.
@@ -30,8 +32,6 @@ EXTRACT_OPTIONS = {
     "extract_hostile": {"enable_fallback": True},
     "curate_corpus": {},
 }
-
-WORKLOADS = tuple(PAGES_PER_CORE)
 
 
 class Inputs:
@@ -71,7 +71,7 @@ class Inputs:
 
 
 def build(workload: str, seed: int, nproc: int) -> Inputs:
-    n = PAGES_PER_CORE[workload] * nproc
+    n = PAGES_PER_CORE * nproc
     pages = fixtures.generate_pages(n, seed)
     inputs = Inputs()
     replaced: dict[int, hostile.HostileRow] = {}
