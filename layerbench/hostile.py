@@ -30,8 +30,9 @@ import random
 # Sizes n per shape; each is also emitted at 2n. Measured single-threaded
 # with fallback on, on a 4-core x86 host: deep 0.14 / 0.17 s, links
 # 0.25 / 0.72 s, unclosed 0.15 / 0.58 s at n / 2n, about 2.0 s in all,
-# against about 2.5 s for the 980 fixture pages beside them (2.6 ms a
-# page). The traced run reports the share as hostile.adversarial_share.
+# about as much as the 780 fixture pages beside them on 4 cores. The
+# traced run reports the share as hostile.adversarial_share (0.52 at
+# seed 7).
 SHAPE_SIZES = {"deep": 500, "links": 2000, "unclosed": 2000}
 NOT_HTML_ROWS = 6
 NULL_ROWS = 6

@@ -35,9 +35,6 @@ ROOT = os.path.dirname(HERE)
 # Fewest warm jobs per untraced run; docs_per_s and cpu_ms_per_doc are
 # medians over them.
 MIN_JOBS = 2
-# Single-threaded latency passes per untraced run; a document's latency
-# is its fastest pass.
-PASSES = 2
 # Driver heap, in place of build_session's 8g default. The host's memory
 # is shared with other tenants, and with an 8g heap the JVM grows its heap
 # by GC timing: over ten curate_corpus runs the process tree peaked at
@@ -247,13 +244,13 @@ def final_rows(path: str) -> list:
 
 # -- single-threaded kernel pass -----------------------------------------------
 
-def kernel_pass(ctx: Context, inputs, recorder, first_cpu: int = 0) -> tuple[dict, float]:
+def kernel_pass(ctx: Context, inputs, recorder) -> tuple[dict, float]:
     """Drive the program's Arrow kernel over the workload's Arrow
     batches in this process, no Spark. Each batch is one span, run
-    pinned to the next CPU in turn from ``first_cpu``: cores of a shared
-    host slow down and recover independently, so rotating them keeps
-    one slow core from setting a whole pass's times. Returns
-    (url -> computed columns, wall seconds)."""
+    pinned to the next CPU in turn: cores of a shared host slow down and
+    recover independently, so rotating them keeps one slow core from
+    setting a whole pass's times. Returns (url -> computed columns, wall
+    seconds)."""
     import pyarrow as pa
 
     from go_trafilatura_spark import kernel, pipeline
@@ -269,7 +266,7 @@ def kernel_pass(ctx: Context, inputs, recorder, first_cpu: int = 0) -> tuple[dic
     t0 = time.perf_counter()
     try:
         while True:
-            os.sched_setaffinity(0, {cpus[(first_cpu + len(outs)) % len(cpus)]})
+            os.sched_setaffinity(0, {cpus[len(outs) % len(cpus)]})
             span = recorder.open("kernel.make_arrow_kernel", doc=-1)
             try:
                 batch = next(gen)
@@ -328,30 +325,6 @@ def phase_targets():
 
 # -- untraced run: end-to-end metrics -------------------------------------------
 
-def latency_pass(ctx: Context, inputs, per_doc: dict, first_cpu: int) -> dict:
-    """One single-threaded pass with only core.extract timed per
-    document, in CPU time of the pass's thread, so time the thread spends
-    preempted does not count; keeps each document's fastest time in
-    ``per_doc``. Returns the pass's output."""
-    from spans import SpanRecorder
-
-    rec = SpanRecorder(clock=time.thread_time_ns)
-    rec.install([root_target()])
-    try:
-        got, _ = kernel_pass(ctx, inputs, rec, first_cpu)
-    finally:
-        rec.uninstall()
-    times = rec.doc_durations("core.extract")
-    for url, ns in times.items():
-        per_doc[url] = min(ns, per_doc.get(url, ns))
-    adversarial = sum(times[u] for u in inputs.shape_of)
-    log(f"latency pass from cpu {first_cpu}: median "
-        f"{statistics.median(times.values()) / 1e6:.3f} ms over {len(times)} docs, "
-        f"total {sum(times.values()) / 1e9:.2f} s, adversarial pages "
-        f"{adversarial / 1e9:.2f} s")
-    return got
-
-
 def timed_job(ctx: Context, in_path: str, out: str):
     """One job with its wall time, tree CPU and peak tree memory.
     Returns (persisted frames, wall s, CPU s, peak bytes)."""
@@ -377,27 +350,15 @@ def run_untraced(ctx: Context):
     n = len(inputs)
 
     # The first job starts cold and only warms the JVM and the workers;
-    # its output is checked, its times are not used. Then single-threaded
-    # latency passes and warm Spark jobs alternate, so both sample the
-    # host over the whole run: a shared host's cores slow down by tens of
-    # percent for seconds at a time. Jobs run until there are MIN_JOBS
-    # and their summed wall time reaches --seconds; there are PASSES
-    # passes, each starting on another core.
+    # its output is checked, its times are not used. Warm jobs then run
+    # until there are MIN_JOBS and their summed wall time reaches
+    # --seconds.
     out = ctx.path("out0")
     handles, wall, _, peak = timed_job(ctx, in_path, out)
     log(f"warm-up job: {wall:.2f} s")
     outs, mems = [out], [peak]
-    per_doc: dict[str, int] = {}
-    passes: list[dict] = []
     walls, cpus = [], []
-
-    def jobs_done():
-        return len(walls) >= MIN_JOBS and sum(walls) >= ctx.seconds
-
-    while not jobs_done() or len(passes) < PASSES:
-        if len(passes) < PASSES and (len(passes) <= len(walls) or jobs_done()):
-            passes.append(latency_pass(ctx, inputs, per_doc, len(passes)))
-            continue
+    while len(walls) < MIN_JOBS or sum(walls) < ctx.seconds:
         release(handles)
         out = ctx.path(f"out{len(outs)}")
         handles, wall, cpu, peak = timed_job(ctx, in_path, out)
@@ -405,10 +366,7 @@ def run_untraced(ctx: Context):
         cpus.append(cpu)
         mems.append(peak)
         outs.append(out)
-    log(f"{len(walls)} warm jobs: " + " ".join(f"{w:.2f}" for w in walls)
-        + f"; {len(passes)} latency passes")
-    doc_ms = [ns / 1e6 for ns in per_doc.values()]
-    reference = passes[0]
+    log(f"{len(walls)} warm jobs: " + " ".join(f"{w:.2f}" for w in walls))
 
     failures: list[str] = []
     attempted = 0
@@ -419,9 +377,11 @@ def run_untraced(ctx: Context):
     release(handles)
     stop_session(ctx)
 
-    for got in passes[1:]:
-        failures += [f"{u}: single-thread passes disagree"
-                     for u in reference if got.get(u) != reference[u]]
+    # The single-threaded, Spark-free pass the Spark output is held to.
+    from spans import SpanRecorder
+
+    reference, wall = kernel_pass(ctx, inputs, SpanRecorder())
+    log(f"single-threaded reference pass: {wall:.2f} s")
 
     if ctx.workload == "curate_corpus":
         attempted += n
@@ -449,9 +409,6 @@ def run_untraced(ctx: Context):
         "docs_per_s": (n / statistics.median(walls), "1/s", len(walls)),
         "cpu_ms_per_doc": (statistics.median(cpus) * 1000 / n, "ms", len(cpus)),
         "peak_rss_mb": (max(mems) / 2**20, "MB", len(mems)),
-        "doc_ms_p50": (statistics.median(doc_ms), "ms", len(doc_ms)),
-        "doc_ms_p999": (statistics.quantiles(doc_ms, n=1000, method="inclusive")[998],
-                        "ms", len(doc_ms)),
     }
     return metrics, attempted, failures
 
@@ -510,10 +467,19 @@ def kernel_layer_metrics(ctx: Context, inputs) -> tuple[dict, list[str], dict]:
     m["trace.overhead_ms_per_doc"] = ((wall1 - wall0) * 1000 / n, "ms", 1)
     m["trace.overhead_share"] = (wall1 / wall0 - 1, "share", 1)
 
+    # Per-document latency, from the untraced pass, where core.extract is
+    # the only wrapped function. It is a per-layer metric: single-threaded
+    # time on a shared host moves with the host's load about twice as much
+    # as throughput does (README).
+    per_doc = plain.doc_durations("core.extract")
+    doc_ms = [ns / 1e6 for ns in per_doc.values()]
+    m["doc_ms_p50"] = (statistics.median(doc_ms), "ms", len(doc_ms))
+    m["doc_ms_p95"] = (statistics.quantiles(doc_ms, n=100, method="inclusive")[94],
+                       "ms", len(doc_ms))
+
     # Per adversarial shape: core.extract time at n and 2n, and their
     # ratio; the adversarial pages' share of all core.extract time. From
-    # the untraced pass, where core.extract is the only wrapped function.
-    per_doc = plain.doc_durations("core.extract")
+    # the same pass.
     ms = {key: per_doc[url] / 1e6 for url, key in inputs.shape_of.items()}
     ratios = []
     for shape, size in hostile.SHAPE_SIZES.items():

@@ -24,7 +24,7 @@ import hostile
 WORKLOADS = ("extract_hostile", "curate_corpus")
 
 # Fixture pages per local core; the input scales with nproc.
-PAGES_PER_CORE = 250
+PAGES_PER_CORE = 200
 
 # extract_pages options per workload: the CLI default (fallback on) for
 # the extraction workload, the extract_job default for curation.
